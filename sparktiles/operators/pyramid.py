@@ -23,6 +23,9 @@ Scale design notes (100 TB / 1000 executors):
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -259,11 +262,16 @@ def with_tile_rank(assigned: DataFrame, order_by, rank_col: str = "rank") -> Dat
 
 # ----------------------------------------------------------------- impute
 
+def dup_threshold(parent_zoom: int) -> int:
+    """Reference dup threshold for a parent zoom (mbtile_tools.py:36-38)."""
+    return EMPTY_TILE_DUP_THRESHOLD_HIGH if parent_zoom > 12 else EMPTY_TILE_DUP_THRESHOLD
+
+
 def dup_tile_ids(tile_map: DataFrame, zoom: int | None = None) -> DataFrame:
     """Duplicate-tile finder (A6, reference mbtile_tools.py:49-103):
     tile_ids appearing >= threshold times — 'empty-ish' content
     (oceans, deserts). Threshold 20, or 50 above z12."""
-    th = EMPTY_TILE_DUP_THRESHOLD_HIGH if (zoom or 0) > 12 else EMPTY_TILE_DUP_THRESHOLD
+    th = dup_threshold(zoom or 0)
     df = tile_map
     if zoom is not None:
         df = df.where(F.col("zoom_level") == zoom)
@@ -310,6 +318,124 @@ def impute_children(parents: DataFrame, dup_keys: DataFrame) -> tuple[DataFrame,
         F.col("tile_row").alias("y"),
     )
     return imputed, generate
+
+
+def tile_range(z: int, bounds_lonlat=None) -> tuple[int, int, int, int]:
+    """(x0, x1, y0, y1) of zoom z's universe: the driver-side twin of
+    `tile_pyramid`'s ranges (clamped floor of `lonlat_to_tile_exprs`,
+    asinh spelled log(t + sqrt(t*t + 1)) as Spark evaluates it)."""
+    n = 2 ** z
+    if bounds_lonlat is None:
+        return 0, n - 1, 0, n - 1
+
+    def tile(lon, lat):
+        t = math.tan(math.radians(lat))
+        fy = (1.0 - math.log(t + math.sqrt(t * t + 1.0)) / math.pi) / 2.0 * n
+        fx = (lon + 180.0) / 360.0 * n
+        return (max(0, min(int(math.floor(fx)), n - 1)),
+                max(0, min(int(math.floor(fy)), n - 1)))
+
+    lon0, lat0, lon1, lat1 = bounds_lonlat
+    x0, y1 = tile(lon0, lat0)
+    x1, y0 = tile(lon1, lat1)
+    return x0, x1, y0, y1
+
+
+def map_row_count(minzoom: int, pyramid_top: int, maxzoom: int,
+                  bounds_lonlat=None) -> int:
+    """Row count of a build's tile map, known from the config alone:
+    every universe tile for z <= pyramid_top, then x4 per walk zoom
+    (each parent row has exactly four child rows). With bounds_lonlat,
+    tiles outside the box that phase 1 encoded at z <= pyramid_top come
+    on top of this (and their children)."""
+    def size(z):
+        x0, x1, y0, y1 = tile_range(z, bounds_lonlat)
+        return max(x1 - x0 + 1, 0) * max(y1 - y0 + 1, 0)
+
+    low = sum(size(z) for z in range(minzoom, pyramid_top + 1))
+    return low + size(pyramid_top) * sum(4 ** k for k in range(1, maxzoom - pyramid_top + 1))
+
+
+def impute_children_local(parent_zoom: int, px, py, pid):
+    """numpy twin of `dup_tile_ids` + `impute_children` for one walk
+    step: parents (px, py, pid) at parent_zoom, pid non-negative
+    integer id codes (equal codes == equal tile_ids). Returns the
+    children (cx, cy, cid, generate): four rows per parent; cid is the
+    parent's code, `generate` is True for children of non-dup parents
+    (their real code comes from the index, or the empty id)."""
+    generate = np.repeat(np.bincount(pid)[pid] < dup_threshold(parent_zoom), 4)
+    cx = np.repeat(px, 4) * 2 + np.tile(np.array([0, 1, 0, 1], dtype=np.int64), len(px))
+    cy = np.repeat(py, 4) * 2 + np.tile(np.array([0, 0, 1, 1], dtype=np.int64), len(py))
+    return cx, cy, np.repeat(pid, 4), generate
+
+
+def _lookup(index_keys_sorted, index_ids_sorted, keys, missing: int):
+    """Id code of each key in a sorted index, or `missing`."""
+    if not len(index_keys_sorted):
+        return np.full(len(keys), missing, dtype=index_ids_sorted.dtype)
+    pos = np.minimum(np.searchsorted(index_keys_sorted, keys), len(index_keys_sorted) - 1)
+    return np.where(index_keys_sorted[pos] == keys, index_ids_sorted[pos], missing)
+
+
+def local_tile_map(iz, ix, iy, iid, minzoom: int, pyramid_top: int,
+                   maxzoom: int, empty_id: int, bounds_lonlat=None):
+    """The whole tile map of a build in one vectorized pass over the
+    blob-free tile index (iz, ix, iy, iid: every non-empty tile phase 1
+    encoded, iid integer id codes; empty_id the empty tile's code).
+    Same rows as the per-zoom Spark walk (bin/generate-tiles:88-117,
+    mbtile_tools.py:106-196):
+
+    - z in [minzoom, pyramid_top]: every index tile plus every universe
+      tile (`tile_range`) without one, the latter with empty_id;
+    - z in (pyramid_top, maxzoom]: four children per parent row;
+      children of dup parents (`dup_threshold`) inherit the parent's
+      code, the others take the index's code or empty_id.
+
+    Returns (z, x, y, id) arrays in zoom order.
+
+    Memory bound: O(R + I) for R map rows and I index rows. The output
+    holds 21 bytes a row (z int8, x/y int64, id int32); with one
+    zoom's temporaries the numpy peak measured ~100 bytes per row on
+    a dense index (I = R = 1.4M, z0-z10: 142 MB). The whole driver
+    pass of `TileBuild._finish_local` (index and output Arrow tables,
+    ~56 bytes a row each, included) added 234 MB of RSS there:
+    ~0.45 GB at the 2M-row gate. Without bounds_lonlat I <= R. The
+    caller gates R (`plans.pipeline.LOCAL_PHASE2_ROWS`), so the bound
+    holds at any data size: bigger maps take the Spark walk."""
+    iz = np.asarray(iz)
+    order = np.argsort(iz, kind="stable")
+    iz, ix, iy, iid = iz[order], np.asarray(ix)[order], np.asarray(iy)[order], np.asarray(iid)[order]
+    bounds = np.searchsorted(iz, np.arange(minzoom, maxzoom + 2))
+
+    def index_at(z):
+        a, b = bounds[z - minzoom], bounds[z - minzoom + 1]
+        keys = (ix[a:b] << z) | iy[a:b]
+        s = np.argsort(keys)
+        return keys[s], iid[a:b][s], ix[a:b][s], iy[a:b][s]
+
+    out = []
+    for z in range(minzoom, pyramid_top + 1):
+        keys, ids, kx, ky = index_at(z)
+        x0, x1, y0, y1 = tile_range(z, bounds_lonlat)
+        ux = np.repeat(np.arange(x0, x1 + 1, dtype=np.int64), max(y1 - y0 + 1, 0))
+        uy = np.tile(np.arange(y0, y1 + 1, dtype=np.int64), max(x1 - x0 + 1, 0))
+        hole = ~np.isin((ux << z) | uy, keys, assume_unique=True)
+        x = np.concatenate([kx, ux[hole]])
+        y = np.concatenate([ky, uy[hole]])
+        i = np.concatenate([ids, np.full(int(hole.sum()), empty_id, dtype=iid.dtype)])
+        out.append((z, x, y, i))
+    for z in range(pyramid_top + 1, maxzoom + 1):
+        _, px, py, pid = out[-1]
+        cx, cy, cid, gen = impute_children_local(z - 1, px, py, pid)
+        keys, ids, _, _ = index_at(z)
+        cid[gen] = _lookup(keys, ids, (cx[gen] << z) | cy[gen], empty_id)
+        out.append((z, cx, cy, cid))
+    return (
+        np.concatenate([np.full(len(x), z, dtype=np.int8) for z, x, _, _ in out]),
+        np.concatenate([x for _, x, _, _ in out]),
+        np.concatenate([y for _, _, y, _ in out]),
+        np.concatenate([i for _, _, _, i in out]),
+    )
 
 
 def tile_multiplier(changed: DataFrame, minzoom: int, maxzoom: int) -> DataFrame:

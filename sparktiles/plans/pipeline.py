@@ -7,12 +7,19 @@ Reproduces the reference driver loop (bin/generate-tiles:88-117):
                   mbtile_tools.py:106-196), generate only the remaining
                   list ('list' scheme)
 
-Each zoom is a checkpoint barrier: tile_map/tile_images for the zoom are
-written to the store (parquet partitioned by zoom — the Iceberg-snapshot
-stand-in in this sandbox), a lineage/metrics row is recorded, and a
-manifest marks the zoom complete so a re-run resumes after the last
-finished zoom (north_rule: resumable from checkpoint with per-partition
-lineage + metrics).
+Two drivers share the store layout (tile_map hive-partitioned by zoom,
+tile_images, lineage, `_manifest.json`, metrics.json):
+
+- `build()`, the faithful loop: each zoom is a checkpoint barrier
+  (map + images written, stats recorded, the manifest marks the zoom
+  complete) so a re-run resumes after the last finished zoom.
+- `build_fast()`: phase 1 encodes every tile of every zoom in one
+  shuffle; phase 2 (map, images, lineage, stats) is a pure function of
+  the blob-free tile index. Maps up to LOCAL_PHASE2_ROWS rows finish
+  in one numpy pass on the driver and are rewritten whole on a re-run;
+  bigger maps take the per-zoom Spark walk, which resumes per zoom.
+
+Every manifest barrier is one atomic write (tmp file + os.replace).
 
 Scale notes: the feature->tile fan-out is map-side; the only wide
 shuffles are the per-(z,x,y[,layer]) groupBys, which AQE re-balances
@@ -24,6 +31,8 @@ from __future__ import annotations
 
 import hashlib
 import json
+import os
+import shutil
 import time
 from dataclasses import dataclass, field
 from pathlib import Path
@@ -42,11 +51,24 @@ from sparktiles.operators.pyramid import (
     assign_point_tiles,
     dup_tile_ids,
     impute_children,
+    local_tile_map,
+    map_row_count,
     tile_pyramid,
 )
 from sparktiles.plans.config import TilesetDef
 
 MAP_SCHEMA = "zoom_level int, tile_column long, tile_row long, tile_id string"
+TILES_SCHEMA = "x long, y long, mvt binary, tile_id string, z int"
+LINEAGE_SCHEMA = (
+    "zoom_level int, partition_file string, n_rows long, n_nonempty long, "
+    "min_x long, max_x long, min_y long, max_y long, n_distinct_ids long")
+LINEAGE_COLUMNS = [f.split()[0] for f in LINEAGE_SCHEMA.split(", ")]
+
+# build_fast computes phase 2 on the driver (`TileBuild._finish_local`)
+# when the tile map has at most this many rows — the same 2M-row gate
+# as graph.py's local union-find finish. Above it the per-zoom Spark
+# walk runs.
+LOCAL_PHASE2_ROWS = 2_000_000
 
 
 def empty_tile_blob(gzip_level: int | None) -> bytes:
@@ -103,10 +125,16 @@ class TileBuild:
             return json.loads(self.manifest_path.read_text())
         return {"zooms": {}}
 
-    def _mark_zoom(self, z: int, stats: dict):
+    def _mark_zooms(self, stats: list[dict]):
+        """One manifest barrier: mark every zoom in `stats` (dicts with
+        a "z" key) complete in a single atomic write — a crash leaves
+        the old manifest or the new one, never a torn file."""
         m = self._load_manifest()
-        m["zooms"][str(z)] = {"status": "complete", **stats}
-        self.manifest_path.write_text(json.dumps(m, indent=1))
+        for st in stats:
+            m["zooms"][str(st["z"])] = {"status": "complete", **st}
+        tmp = self.manifest_path.with_name(self.manifest_path.name + ".tmp")
+        tmp.write_text(json.dumps(m, indent=1))
+        os.replace(tmp, self.manifest_path)
 
     def _zoom_done(self, z: int) -> bool:
         return self._load_manifest()["zooms"].get(str(z), {}).get("status") == "complete"
@@ -137,7 +165,7 @@ class TileBuild:
 
     def read_lineage(self) -> DataFrame:
         """Per-partition lineage/metrics rows written by build_fast."""
-        return self.spark.read.parquet(str(self.store / "lineage"))
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(str(self.store / "lineage"))
 
     def read_tile_images(self) -> DataFrame:
         # per-zoom dirs (faithful loop) and/or the bulk dir (fast build)
@@ -234,29 +262,173 @@ class TileBuild:
 
         Phase 1 — ONE wide job: every layer's features are exploded to
         all zooms (assign_point_tiles_multi), grouped once by (z,x,y)
-        into MVT blobs, and written partitioned by z. This replaces
-        per-zoom generation; valid because a tile that the impute loop
-        would generate gets exactly the same features either way (a
-        feature inside a child's buffered bbox is inside its parent's
-        buffered bbox — buffers double in meters per zoom step down).
+        into MVT blobs, and written partitioned by z to `tiles_all`.
+        This replaces per-zoom generation; valid because a tile that the
+        impute loop would generate gets exactly the same features either
+        way (a feature inside a child's buffered bbox is inside its
+        parent's buffered bbox — buffers double in meters per zoom step
+        down).
 
-        Phase 2 — bookkeeping only, batched for job-count:
-        (a) zooms [min..mid] have no inter-zoom dependency: all their
-            map rows (generated + empty-universe) are written in ONE
-            job;
-        (b) zooms (mid..max] run the reference impute walk (children
-            of duplicate parents inherit tile_id, the rest generate) —
-            inherently sequential, one small-row job per zoom;
-        (c) ONE final job materializes tile_images (tiles_all semi-join
-            on the tile_ids the map references) and per-zoom stats.
+        Phase 2 — bookkeeping only: the tile map (zooms up to the
+        pyramid top with their empties, then the reference impute walk),
+        tile_images, lineage and per-zoom stats. All of it is a pure
+        function of the blob-free index (z, x, y, tile_id) of
+        `tiles_all` and the config. The map's row count is known from
+        the config (`map_row_count`), and it picks the path:
+
+        - at most LOCAL_PHASE2_ROWS rows: `_finish_local` reads the index
+          once and computes the whole map in one numpy pass on the
+          driver (`local_tile_map`: O(map + index rows) memory, about
+          0.45 GB of driver RSS at the gate); one Spark write each for
+          the map and the images, the lineage from the arrays.
+        - above it: `_finish_distributed`, the per-zoom Spark walk (one
+          job for zooms up to the pyramid top, one per walk zoom, then
+          images and lineage over the written map), resumable per zoom.
+
+        The pyramid top is max(minzoom, min(mid_zoom, maxzoom)): the
+        first zoom is always generated whole, as in build().
         """
-        from sparktiles.operators.pyramid import assign_point_tiles_multi
-
         cfg = self.cfg
         empty_blob = empty_tile_blob(cfg.gzip_level)
         empty_id = hashlib.md5(empty_blob).hexdigest()
         t_start = time.time()
-        tiles_all_path = str(self.store / "tiles_all")
+
+        # ---- phase 1: all non-empty tiles, one shuffle (single- and
+        # multi-layer alike: _build_tiles fuses per-layer encode and
+        # tile assembly into one (zxy) grouped pass)
+        if not (self.store / "tiles_all" / "_SUCCESS").exists():
+            tiles = self._build_tiles((cfg.minzoom, cfg.maxzoom), None)
+            tiles.write.mode("overwrite").partitionBy("z").parquet(self._tiles_all_path())
+
+        # ---- phase 2: map, images, lineage and per-zoom stats
+        top = max(cfg.minzoom, min(cfg.mid_zoom, cfg.maxzoom))
+        n_map = map_row_count(cfg.minzoom, top, cfg.maxzoom, cfg.bounds_lonlat)
+        finish = self._finish_local if n_map <= LOCAL_PHASE2_ROWS else self._finish_distributed
+        zstats = finish(top, empty_id, empty_blob)
+
+        total_tiles = 0
+        for z in range(cfg.minzoom, cfg.maxzoom + 1):
+            n_, ne_ = zstats.get(z, (0, 0))
+            self.metrics.append({"z": z, "n_tiles": n_, "n_nonempty": ne_})
+            total_tiles += n_
+        self._mark_zooms(self.metrics)
+
+        wall = time.time() - t_start
+        summary = {
+            "tiles": total_tiles,
+            "wall_s": round(wall, 3),
+            "tiles_per_s": round(total_tiles / wall, 2) if wall > 0 else None,
+            "zooms": self.metrics,
+        }
+        (self.store / "metrics.json").write_text(json.dumps(summary, indent=1))
+        return summary
+
+    def _tiles_all_path(self) -> str:
+        return str(self.store / "tiles_all")
+
+    def _tiles_all(self) -> DataFrame:
+        """Phase 1's tiles, read with an explicit schema (no inference
+        job; a zoom without tiles reads as empty)."""
+        path = self._tiles_all_path()
+        return (self.spark.read.schema(TILES_SCHEMA).option("basePath", path)
+                .parquet(path).select("z", "x", "y", "mvt", "tile_id"))
+
+    def _empty_image(self, empty_id: str, empty_blob: bytes) -> DataFrame:
+        # from Arrow: a local relation, so the job that writes it starts
+        # no Python worker (a row list would)
+        import pyarrow as pa
+
+        return self.spark.createDataFrame(
+            pa.table({"tile_id": [empty_id], "tile_data": pa.array([empty_blob], pa.binary())}),
+            "tile_id string, tile_data binary")
+
+    def _finish_local(self, top: int, empty_id: str, empty_blob: bytes) -> dict:
+        """Phase 2 on the driver: one read of the blob-free index, one
+        numpy pass (`local_tile_map`), then one write each for the map
+        (all zooms, one file per zoom), the images (a semi-join of
+        `tiles_all` on one known position of every used id, so no
+        dedup shuffle) and the lineage (computed from the arrays).
+        Returns {z: (n_tiles, n_nonempty)}."""
+        import numpy as np
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        cfg = self.cfg
+        index = self._tiles_all().select("z", "x", "y", "tile_id").toArrow()
+        enc = index.column("tile_id").combine_chunks().dictionary_encode()
+        names, codes = enc.dictionary, enc.indices.to_numpy(zero_copy_only=False)
+        empty = pc.index(names, empty_id).as_py()
+        if empty < 0:
+            names = pa.concat_arrays([names, pa.array([empty_id])])
+            empty = len(names) - 1
+        iz, ix, iy = (index.column(c).to_numpy() for c in ("z", "x", "y"))
+        z, x, y, ids = local_tile_map(iz, ix, iy, codes, cfg.minzoom, top, cfg.maxzoom,
+                                      empty, cfg.bounds_lonlat)
+
+        map_root = self._map_root()
+        tile_map = pa.table({
+            "zoom_level": z.astype(np.int32), "tile_column": x, "tile_row": y,
+            "tile_id": names.take(pa.array(ids)),
+        })
+        # one task: every zoom_level dir gets exactly one file, which the
+        # lineage rows below name
+        (self.spark.createDataFrame(tile_map, MAP_SCHEMA).coalesce(1).write
+         .partitionBy("zoom_level").option("partitionOverwriteMode", "dynamic")
+         .option("maxRecordsPerFile", 0).mode("overwrite").parquet(map_root))
+
+        # dictionary codes follow first occurrence, so every index code
+        # has a first row; the empty tile gets its own image row
+        _, first = np.unique(codes, return_index=True)
+        used = np.unique(ids)
+        reps = first[used[used != empty]]
+        rep_keys = self.spark.createDataFrame(
+            pa.table({"z": iz[reps], "x": ix[reps], "y": iy[reps]}), "z int, x long, y long")
+        images = (
+            self._tiles_all().join(F.broadcast(rep_keys), ["z", "x", "y"], "left_semi")
+            .select("tile_id", F.col("mvt").alias("tile_data"))
+            .unionByName(self._empty_image(empty_id, empty_blob))
+        )
+        images.write.mode("overwrite").parquet(str(self.store / "tile_images" / "all"))
+
+        # lineage (LINEAGE_SCHEMA) and stats from the arrays: driver-side
+        # metadata, written by the driver like the manifest
+        cuts = np.searchsorted(z, np.arange(cfg.minzoom, cfg.maxzoom + 2))
+        lineage, zstats = [], {}
+        for zz in range(cfg.minzoom, cfg.maxzoom + 1):
+            a, b = cuts[zz - cfg.minzoom], cuts[zz - cfg.minzoom + 1]
+            if a == b:
+                continue
+            (part,) = Path(map_root, f"zoom_level={zz}").glob("*.parquet")
+            zstats[zz] = (int(b - a), int((ids[a:b] != empty).sum()))
+            # partition_file as input_file_name() spells it (no %-escapes)
+            lineage.append(dict(zip(LINEAGE_COLUMNS, (
+                zz, f"file://{part.resolve()}", *zstats[zz],
+                int(x[a:b].min()), int(x[a:b].max()), int(y[a:b].min()), int(y[a:b].max()),
+                len(np.unique(ids[a:b]))))))
+        lineage_dir = self.store / "lineage"
+        shutil.rmtree(lineage_dir, ignore_errors=True)
+        lineage_dir.mkdir()
+        schema = pa.schema([("zoom_level", pa.int32()), ("partition_file", pa.string())]
+                           + [(c, pa.int64()) for c in LINEAGE_COLUMNS[2:]])
+        pq.write_table(pa.Table.from_pylist(lineage, schema=schema),
+                       str(lineage_dir / "part-00000.parquet"))
+        return zstats
+
+    def _finish_distributed(self, top: int, empty_id: str, empty_blob: bytes) -> dict:
+        """Phase 2 in Spark, for maps above the local gate:
+        (a) zooms [min..top] have no inter-zoom dependency: all their
+            map rows (generated + empty-universe) are written in ONE
+            job;
+        (b) zooms (top..max] run the reference impute walk (children
+            of duplicate parents inherit tile_id, the rest generate) —
+            inherently sequential, one small-row job per zoom;
+        (c) ONE final job materializes tile_images (tiles_all semi-join
+            on the tile_ids the map references), one the lineage.
+        Each of (a) and every walk zoom is a manifest barrier, so a
+        re-run resumes after the last finished zoom. Returns
+        {z: (n_tiles, n_nonempty)}."""
+        cfg = self.cfg
 
         def as_map(df):
             return df.select(
@@ -266,36 +438,15 @@ class TileBuild:
                 "tile_id",
             )
 
-        # ---- phase 1: all non-empty tiles, one shuffle (single- and
-        # multi-layer alike: _build_tiles fuses per-layer encode and
-        # tile assembly into one (zxy) grouped pass)
-        if not (self.store / "tiles_all" / "_SUCCESS").exists():
-            tiles = self._build_tiles((cfg.minzoom, cfg.maxzoom), None)
-            tiles.write.mode("overwrite").partitionBy("z").parquet(tiles_all_path)
-
-        def tiles_at(z):
-            return (
-                self.spark.read.option("basePath", tiles_all_path)
-                .parquet(f"{tiles_all_path}/z={z}")
-                .select("z", "x", "y", "mvt", "tile_id")
-            )
-
         def tiles_range(z0, z1):
-            return (
-                self.spark.read.option("basePath", tiles_all_path)
-                .parquet(tiles_all_path)
-                .where((F.col("z") >= z0) & (F.col("z") <= z1))
-                .select("z", "x", "y", "mvt", "tile_id")
-            )
+            return self._tiles_all().where((F.col("z") >= z0) & (F.col("z") <= z1))
 
-        # ---- phase 2a: zooms [min..mid] in ONE job, ONE write — hive-
+        # ---- (a): zooms [min..top] in ONE job, ONE write — hive-
         # partitioned by zoom_level (dynamic overwrite touches only the
         # partitions written; rows are never written twice)
-        mid = min(cfg.mid_zoom, cfg.maxzoom)
-        low_done = all(self._zoom_done(z) for z in range(cfg.minzoom, mid + 1))
-        if not low_done:
-            low = tiles_range(cfg.minzoom, mid)
-            universe = tile_pyramid(self.spark, cfg.minzoom, mid, cfg.bounds_lonlat)
+        if not all(self._zoom_done(z) for z in range(cfg.minzoom, top + 1)):
+            low = tiles_range(cfg.minzoom, top)
+            universe = tile_pyramid(self.spark, cfg.minzoom, top, cfg.bounds_lonlat)
             empties = universe.join(
                 low.select("z", "x", "y"), ["z", "x", "y"], "left_anti"
             ).select(
@@ -308,17 +459,16 @@ class TileBuild:
             (low_map.write.partitionBy("zoom_level")
              .option("partitionOverwriteMode", "dynamic")
              .mode("overwrite").parquet(self._map_root()))
-            for z in range(cfg.minzoom, mid + 1):
-                self._mark_zoom(z, {"z": z})
+            self._mark_zooms([{"z": z} for z in range(cfg.minzoom, top + 1)])
 
-        # ---- phase 2b: impute walk for zooms (mid..max]
-        for z in range(mid + 1, cfg.maxzoom + 1):
+        # ---- (b): impute walk for zooms (top..max]
+        for z in range(top + 1, cfg.maxzoom + 1):
             if self._zoom_done(z):
                 continue
             parents = self.read_tile_map(z - 1)
             dups = dup_tile_ids(parents, z - 1)
             imputed, gen_list = impute_children(parents, dups)
-            tiles = tiles_at(z)
+            tiles = tiles_range(z, z)
             gen_map = as_map(tiles).join(
                 gen_list.select(
                     F.col("z").alias("zoom_level"),
@@ -338,9 +488,9 @@ class TileBuild:
             )
             map_rows = imputed.unionByName(gen_map).unionByName(gen_empties)
             self._write_zoom_map(map_rows, z)
-            self._mark_zoom(z, {"z": z})
+            self._mark_zooms([{"z": z}])
 
-        # ---- phase 2c: images + per-zoom stats, one job each
+        # ---- (c): images + per-zoom stats, one job each
         all_map = self.read_tile_map()
         used_ids = all_map.select("tile_id").distinct()
         images = (
@@ -348,9 +498,7 @@ class TileBuild:
             .select("tile_id", F.col("mvt").alias("tile_data"))
             .join(used_ids, "tile_id", "left_semi")
             .dropDuplicates(["tile_id"])
-            .unionByName(self.spark.createDataFrame(
-                [(empty_id, bytearray(empty_blob))],
-                "tile_id string, tile_data binary"))
+            .unionByName(self._empty_image(empty_id, empty_blob))
         )
         images.write.mode("overwrite").parquet(str(self.store / "tile_images" / "all"))
         # per-partition lineage: one row per output file per zoom with
@@ -368,31 +516,11 @@ class TileBuild:
             F.countDistinct("tile_id").alias("n_distinct_ids"),
         ).withColumnRenamed("_file", "partition_file")
         lineage.write.mode("overwrite").parquet(str(self.store / "lineage"))
-        lin_rows = self.spark.read.parquet(str(self.store / "lineage")).collect()
         zstats = {}
-        for r in lin_rows:
-            z_, n_, ne_ = int(r.zoom_level), int(r.n_rows), int(r.n_nonempty)
-            if z_ not in zstats:
-                zstats[z_] = [0, 0]
-            zstats[z_][0] += n_
-            zstats[z_][1] += ne_
-        total_tiles = 0
-        for z in range(cfg.minzoom, cfg.maxzoom + 1):
-            n_, ne_ = zstats.get(z, (0, 0))
-            stats = {"z": z, "n_tiles": n_, "n_nonempty": ne_}
-            self.metrics.append(stats)
-            self._mark_zoom(z, stats)
-            total_tiles += n_
-
-        wall = time.time() - t_start
-        summary = {
-            "tiles": total_tiles,
-            "wall_s": round(wall, 3),
-            "tiles_per_s": round(total_tiles / wall, 2) if wall > 0 else None,
-            "zooms": self.metrics,
-        }
-        (self.store / "metrics.json").write_text(json.dumps(summary, indent=1))
-        return summary
+        for r in self.read_lineage().collect():
+            n_, ne_ = zstats.get(int(r.zoom_level), (0, 0))
+            zstats[int(r.zoom_level)] = (n_ + int(r.n_rows), ne_ + int(r.n_nonempty))
+        return zstats
 
     def build(self) -> dict:
         """Run the full z loop; returns summary metrics."""
@@ -481,7 +609,7 @@ class TileBuild:
                 stats["n_generate_listed"] = n_gen_listed
                 stats["n_imputed"] = n_tiles - n_gen_listed
             self.metrics.append(stats)
-            self._mark_zoom(z, stats)
+            self._mark_zooms([stats])
             total_tiles += n_tiles
 
         wall = time.time() - t_start

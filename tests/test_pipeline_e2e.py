@@ -18,7 +18,12 @@ from pyspark.sql import functions as F
 
 from sparktiles.functions import mvtcodec as C
 from sparktiles.plans.config import FieldDef, LayerDef, TilesetDef
-from sparktiles.plans.pipeline import BuildConfig, TileBuild, make_point_layer_frames
+from sparktiles.plans.pipeline import (
+    BuildConfig,
+    TileBuild,
+    empty_tile_blob,
+    make_point_layer_frames,
+)
 from sparktiles.sources.geoparse import build_features
 from sparktiles.sources.pages import generate_pages
 
@@ -208,10 +213,20 @@ def test_impute_equals_direct(spark, pages, tileset, tmp_path):
     assert m1.exceptAll(m2).count() == 0
 
 
-def test_fast_build_equals_loop_build(spark, pages, tileset, tmp_path):
-    """build_fast (one-shot blob generation + per-zoom bookkeeping)
-    must produce the identical tile_map AND identical image bytes as
-    the faithful per-zoom loop."""
+def _assert_same_store(slow, fast):
+    m1, m2 = slow.read_tile_map(), fast.read_tile_map()
+    assert m1.count() == m2.count()
+    assert m1.exceptAll(m2).count() == 0
+    i1 = {r.tile_id: bytes(r.tile_data) for r in slow.read_tile_images().collect()}
+    i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
+    for tid in {r.tile_id for r in m2.select("tile_id").distinct().collect()}:
+        assert i1[tid] == i2[tid]
+
+
+def test_fast_build_equals_loop_build(spark, pages, tileset, tmp_path, phase2_path):
+    """build_fast (one-shot blob generation + phase-2 bookkeeping, on
+    both phase-2 paths) must produce the identical tile_map AND
+    identical image bytes as the faithful per-zoom loop."""
     feats = build_features(pages).cache()
     frames = make_point_layer_frames(feats, tileset)
     slow = TileBuild(spark, frames, BuildConfig(
@@ -220,14 +235,7 @@ def test_fast_build_equals_loop_build(spark, pages, tileset, tmp_path):
         store_dir=str(tmp_path / "fast"), minzoom=0, maxzoom=4, mid_zoom=2))
     slow.build()
     fast.build_fast()
-    m1, m2 = slow.read_tile_map(), fast.read_tile_map()
-    assert m1.count() == m2.count()
-    assert m1.exceptAll(m2).count() == 0
-    i1 = {r.tile_id: bytes(r.tile_data) for r in slow.read_tile_images().collect()}
-    i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
-    used = {r.tile_id for r in m2.select("tile_id").distinct().collect()}
-    for tid in used:
-        assert i1[tid] == i2[tid]
+    _assert_same_store(slow, fast)
 
 
 def test_resume_skips_completed_zooms(spark, pages, tileset, tmp_path):
@@ -244,7 +252,7 @@ def test_resume_skips_completed_zooms(spark, pages, tileset, tmp_path):
     assert sorted(first) == [0, 1, 2, 3]
 
 
-def test_single_zoom_build(spark, pages, tileset, tmp_path):
+def test_single_zoom_build(spark, pages, tileset, tmp_path, phase2_path):
     # minzoom == maxzoom == mid_zoom: degenerate pyramid, no impute walk
     from sparktiles.sources.geoparse import build_features
 
@@ -256,6 +264,72 @@ def test_single_zoom_build(spark, pages, tileset, tmp_path):
     tm = b.read_tile_map()
     assert tm.count() == 64
     assert {r.zoom_level for r in tm.select("zoom_level").distinct().collect()} == {3}
+
+
+def test_fast_build_mid_zoom_below_minzoom(spark, pages, tileset, tmp_path, phase2_path):
+    """mid_zoom < minzoom: the first zoom is generated whole (pyramid
+    scheme), the rest walk from it — as build() does."""
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    kw = dict(minzoom=3, maxzoom=4, mid_zoom=2)
+    slow = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "slow"), **kw))
+    fast = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "fast"), **kw))
+    assert slow.build()["tiles"] == 64 + 256
+    assert fast.build_fast()["tiles"] == 64 + 256
+    _assert_same_store(slow, fast)
+
+
+def _lonlat_tile(lon, lat, z):
+    """Clamped floor of lon/lat -> tile (tilemath.lonlat_to_tile_exprs)."""
+    n = 2 ** z
+    lat_r = math.radians(lat)
+    fx = (lon + 180.0) / 360.0 * n
+    fy = (1.0 - math.asinh(math.tan(lat_r)) / math.pi) / 2.0 * n
+    return (min(max(math.floor(fx), 0), n - 1), min(max(math.floor(fy), 0), n - 1))
+
+
+def test_fast_build_with_bounds(spark, pages, tileset, tmp_path, phase2_path):
+    """bounds_lonlat restricts the generated universe; tiles with
+    features outside the box stay in the map (build() keeps them too).
+    The north edge lies above mercator's 85.05 deg, so y clamps to 0."""
+    bounds = (-10.0, 35.0, 30.0, 88.0)
+    feats = build_features(pages).cache()
+    frames = make_point_layer_frames(feats, tileset)
+    kw = dict(minzoom=0, maxzoom=4, mid_zoom=2, bounds_lonlat=bounds)
+    slow = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "slow"), **kw))
+    fast = TileBuild(spark, frames, BuildConfig(store_dir=str(tmp_path / "fast"), **kw))
+    slow.build()
+    fast.build_fast()
+    _assert_same_store(slow, fast)
+    empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
+    rows = fast.read_tile_map().collect()
+    for z in range(3):  # the pyramid zooms
+        x0, y1 = _lonlat_tile(bounds[0], bounds[1], z)
+        x1, y0 = _lonlat_tile(bounds[2], bounds[3], z)
+        assert y0 == 0
+        cells = {(r.tile_column, r.tile_row): r.tile_id for r in rows if r.zoom_level == z}
+        box = {(x, y) for x in range(x0, x1 + 1) for y in range(y0, y1 + 1)}
+        assert box <= set(cells)
+        # outside the box only generated (non-empty) tiles appear
+        outside = set(cells) - box
+        assert all(cells[c] != empty_id for c in outside)
+    assert outside
+
+
+def test_fast_build_no_features(spark, tmp_path, phase2_path):
+    """A build over zero features is the universe of empty tiles, with
+    the empty image as the only blob."""
+    from sparktiles.operators.mvt import LayerSpec
+
+    spec = LayerSpec(layer_id="place", index=0, attr_fields={"name": "string"})
+    feats = spark.createDataFrame([], "feature_id long, px double, py double, name string")
+    b = TileBuild(spark, [(spec, feats)], BuildConfig(
+        store_dir=str(tmp_path / "e"), minzoom=0, maxzoom=3, mid_zoom=1))
+    assert b.build_fast()["tiles"] == 1 + 4 + 16 + 64
+    empty_id = hashlib.md5(empty_tile_blob(None)).hexdigest()
+    assert {r.tile_id for r in b.read_tile_map().select("tile_id").distinct().collect()} == {
+        empty_id}
+    assert [r.tile_id for r in b.read_tile_images().collect()] == [empty_id]
 
 
 def test_jvm_and_pandas_extraction_identical(spark, pages):
@@ -277,7 +351,7 @@ def test_jvm_and_pandas_extraction_identical(spark, pages):
     assert bad == 0
 
 
-def test_fast_build_equals_loop_build_wkb(spark, tmp_path):
+def test_fast_build_equals_loop_build_wkb(spark, tmp_path, phase2_path):
     """Faithful-vs-fast equivalence for a WKB line layer: the per-zoom
     loop (supercover assignment at each single zoom + impute) must
     produce the identical tile_map and image bytes as the one-shot
@@ -297,10 +371,4 @@ def test_fast_build_equals_loop_build_wkb(spark, tmp_path):
         store_dir=str(tmp_path / "wfast"), minzoom=0, maxzoom=3, mid_zoom=1))
     slow.build()
     fast.build_fast()
-    m1, m2 = slow.read_tile_map(), fast.read_tile_map()
-    assert m1.count() == m2.count()
-    assert m1.exceptAll(m2).count() == 0
-    i1 = {r.tile_id: bytes(r.tile_data) for r in slow.read_tile_images().collect()}
-    i2 = {r.tile_id: bytes(r.tile_data) for r in fast.read_tile_images().collect()}
-    for tid in {r.tile_id for r in m2.select("tile_id").distinct().collect()}:
-        assert i1[tid] == i2[tid]
+    _assert_same_store(slow, fast)

@@ -56,7 +56,7 @@ def test_density_cap(spark):
     assert ids == list(range(475, 500))
 
 
-def test_lineage_table(spark, tmp_path):
+def test_lineage_table(spark, tmp_path, phase2_path):
     from sparktiles.plans.config import FieldDef, LayerDef, TilesetDef
     from sparktiles.plans.pipeline import (
         BuildConfig, TileBuild, make_point_layer_frames)
